@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from liblevenshtein_rust_spark.functions.canonicalize import canon_text
+from liblevenshtein_rust_spark.operators.candidates import (
+    attach,
+    candidate_pairs,
+    explode_keys,
+)
 from liblevenshtein_rust_spark.operators.skew import spread_input
 
 
@@ -148,35 +153,16 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
         band_key_sql = (
             f"transform(sequence(0, {bands - 1}), b -> "
             f"concat(b, ':', array_join(slice(signature, b * {rows_per} + 1, {rows_per}), ',')))")
-    band_keys = F.expr(band_key_sql)
-    # r6 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): pre-partition the keyed table on the join key so BOTH
-    # sides of the self-join require exactly this exchange — AQE stage
-    # reuse then computes the signature pipeline ONCE instead of once per
-    # side (profiled: two concurrent 1.9 s/1.7 s signature stages at
-    # sf0.1 collapsed to one).
-    keyed = sigs.select(F.col(id_col).alias("_bid"),
-                        F.explode(band_keys).alias("_bkey")) \
-        .repartition("_bkey")
-    l = keyed.withColumnRenamed("_bid", "id_a").alias("lk")
-    r = keyed.withColumnRenamed("_bid", "id_b").alias("rk")
-    cand = (
-        l.join(r, F.col("lk._bkey") == F.col("rk._bkey"))
-        .select(F.col("lk.id_a").alias("id_a"), F.col("rk.id_b").alias("id_b"))
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = candidate_pairs(explode_keys(sigs, id_col, band_key_sql))
     # verify side spread too (r6): this subtree is broadcast-built, and
     # without the spread the interpreted shingle lambda ran on ONE task
     # (profiled 2.4 s serial — the whole query's critical path)
     toks = spread_input(docs.select(id_col, text_col)).select(
         F.col(id_col), F.array_distinct(_shingles(text_col, shingle_k)).alias("_t"))
-    a = toks.select(F.col(id_col).alias("id_a"), F.col("_t").alias("_ta"))
-    b = toks.select(F.col(id_col).alias("id_b"), F.col("_t").alias("_tb"))
     verified = (
-        cand.join(a, "id_a").join(b, "id_b")
+        attach(cand, toks, toks, id_col, "_t", id_col, "_t", dedupe=False)
         .select(
-            "id_a", "id_b",
+            F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"),
             F.size(F.array_intersect("_ta", "_tb")).alias("n_common"),
             F.size(F.array_union("_ta", "_tb")).alias("n_union"),
         )
@@ -325,8 +311,9 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
 
 def unpersist_inputs(df: DataFrame) -> None:
     """Release cached inputs a ``persist=True`` operator attached to its
-    result (currently: token_jaccard_pairs' exploded token table). Safe
-    on any DataFrame; call after the result is materialized."""
+    result (token_jaccard_pairs, and fuzzy_join / fuzzy_self_join /
+    weighted_fuzzy_join in operators/fuzzy_join). Safe on any DataFrame;
+    call after the result is materialized."""
     for cached in getattr(df, "_lls_persisted_inputs", []) or []:
         cached.unpersist()
 
@@ -423,23 +410,16 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
         # part of an array<...> type and errors
         piece = "sig" if width >= 64 else f"shiftright(sig, {lo}) & {(1 << width) - 1}"
         band_exprs.append(f"concat('{b}:', cast({piece} as string))")
-    bands = F.expr(f"array({', '.join(band_exprs)})")
-    # same exchange-reuse shape as minhash_lsh_pairs: one signature
-    # computation feeds both join sides through a shared _bkey exchange
-    keyed = sigs.select(F.col(id_col).alias("_bid"), F.col("sig"),
-                        F.explode(bands).alias("_bkey")) \
-        .repartition("_bkey")
-    l = keyed.select(F.col("_bid").alias("id_a"), F.col("sig").alias("_sa"), "_bkey").alias("lk")
-    r = keyed.select(F.col("_bid").alias("id_b"), F.col("sig").alias("_sb"), "_bkey").alias("rk")
-    cand = (
-        l.join(r, F.col("lk._bkey") == F.col("rk._bkey"))
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
+    cand = candidate_pairs(
+        explode_keys(sigs, id_col, f"array({', '.join(band_exprs)})"))
+    # sig is unique per id: simhash_signatures groups by id_col
+    return (
+        attach(cand, sigs, sigs, id_col, "sig", id_col, "sig", dedupe=False)
+        .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"),
+                F.bit_count(F.col("_ta").bitwiseXOR(F.col("_tb")))
+                .alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
-    return cand
 
 
 def near_dup_dedup(docs: DataFrame, pairs: DataFrame, *,

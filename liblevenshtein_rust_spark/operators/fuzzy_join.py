@@ -7,6 +7,9 @@ Re-expresses the reference's automaton-intersection query
     explode blocking keys  ->  equi-join on key hash  ->  dedupe pairs
       ->  attach texts  ->  vectorized banded-DP verify  ->  filter d <= n
 
+(the candidate half of that shape is ``operators/candidates.py``, shared
+with every other blocked join).
+
 Never a cartesian product: blocking keys prune exactly like the automaton
 prunes dictionary subtrees. Scale notes:
 
@@ -16,8 +19,6 @@ prunes dictionary subtrees. Scale notes:
   (much smaller, distinct-term) dictionary back in. Dictionary distinctness
   also kills the classic transcript skew source — a million "ok" turns are
   ONE dictionary term.
-- Pair canonicalization (least/greatest) + dropDuplicates mirrors the
-  reference's SymmetricPair memo key (/root/reference/src/distance/mod.rs:37-57).
 - AQE skew-join splitting + runtime bloom filters are enabled by the
   session factory; blocking joins are plain shuffled equi-joins that AQE
   can re-plan.
@@ -25,15 +26,13 @@ prunes dictionary subtrees. Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from liblevenshtein_rust_spark.functions.blocking_keys import (
-    deletion_keys,
     deletion_keys_sql,
     effective_depth,
-    hash_keys,
     hash_keys_sql,
     probe_keys_sql,
     segment_keys_sql,
@@ -44,6 +43,11 @@ from liblevenshtein_rust_spark.functions.distance import (
     TRANSPOSITION,
     make_distance_udf,
     make_prefix_distance_udf,
+)
+from liblevenshtein_rust_spark.operators.candidates import (
+    attach,
+    candidate_pairs,
+    explode_keys,
 )
 
 #: strings at or below this length use deletion-neighborhood blocking
@@ -92,60 +96,12 @@ def _seg_k(n: int, variant: str) -> int:
     return n if variant == STANDARD else 2 * n
 
 
-def _explode_keys(df: DataFrame, id_col: str, keys_sql: str) -> DataFrame:
-    # whole key pipeline as ONE parsed expression (r6: the per-Column py4j
-    # construction cost of these shared helpers was ~0.5 s of driver time
-    # per pair query — guide §4, the Python boundary exists on the driver)
-    return df.selectExpr(f"`{id_col}` AS _bid",
-                         f"explode({hash_keys_sql(keys_sql)}) AS _bkey")
-
-
-def _candidates_from_keys(left_keys: DataFrame, right_keys: DataFrame,
-                          self_join: bool) -> DataFrame:
-    """Join exploded key tables -> distinct candidate id pairs.
-
-    Self-joins pre-partition the key table on the join key below the
-    per-side aliases, so both sides require exactly that exchange and
-    AQE stage reuse computes the key-generation pipeline ONCE (r6, guide
-    §2.4 — the same shape as dedup.minhash_lsh_pairs; the per-side
-    aliased plans otherwise materialized two identical key stages)."""
-    if self_join:
-        left_keys = right_keys = left_keys.repartition("_bkey")
-    l = left_keys.selectExpr("_bid AS _ida", "_bkey").alias("lk")
-    r = right_keys.selectExpr("_bid AS _idb", "_bkey").alias("rk")
-    pairs = l.join(r, F.col("lk._bkey") == F.col("rk._bkey"), "inner") \
-        .selectExpr("lk._ida AS _ida", "rk._idb AS _idb")
-    if self_join:
-        pairs = pairs.where("_ida < _idb")
-    return pairs.dropDuplicates(["_ida", "_idb"])
-
-
-def _attach_texts(pairs: DataFrame, left: DataFrame, right: DataFrame,
-                  l_id: str, l_text: str, r_id: str, r_text: str,
-                  dedupe: bool = True) -> DataFrame:
-    """Join the (_ida, _idb) candidate pairs back to their texts as
-    (_ta, _tb) — the shared candidate-to-verify plumbing of every join
-    variant in this module.
-
-    ``dedupe=False`` skips the defensive one-row-per-id collapse when the
-    caller PROVES id uniqueness (r6: the collapse is a first(string)
-    aggregate, which plans a SortAggregate + Sort + Exchange per side —
-    pure overhead for dictionary inputs whose ids are unique by
-    construction)."""
-    lt = left.selectExpr(f"`{l_id}` AS _ida", f"`{l_text}` AS _ta")
-    rt = right.selectExpr(f"`{r_id}` AS _idb", f"`{r_text}` AS _tb")
-    if dedupe:
-        lt = lt.dropDuplicates(["_ida"])
-        rt = rt.dropDuplicates(["_idb"])
-    return pairs.join(lt, "_ida").join(rt, "_idb")
-
-
 def _score_pairs(pairs: DataFrame, left: DataFrame, right: DataFrame,
                  l_id: str, l_text: str, r_id: str, r_text: str,
                  n: int, variant: str, subst=None,
                  dedupe_texts: bool = True) -> DataFrame:
-    with_text = _attach_texts(pairs, left, right, l_id, l_text, r_id, r_text,
-                              dedupe=dedupe_texts)
+    with_text = attach(pairs, left, right, l_id, l_text, r_id, r_text,
+                       dedupe=dedupe_texts)
     # cheap JVM-side prefilter before the (Arrow) scoring kernel: every
     # variant changes length by at most 1 per edit
     with_text = with_text.where(f"abs(length(_ta) - length(_tb)) <= {int(n)}")
@@ -166,7 +122,8 @@ def _score_pairs(pairs: DataFrame, left: DataFrame, right: DataFrame,
 
 def _keys_for(df: DataFrame, id_col: str, text_col: str, n: int, variant: str,
               method: str, role: str, subst=None) -> DataFrame:
-    """role: 'index' | 'probe' | 'both' (self-join emits both sides).
+    """Hashed blocking-key table (_bid, _bkey) for ``method``.
+    role: 'index' | 'probe' | 'both' (self-join emits both sides).
 
     With a SubstitutionSet, keys are generated over class-canonicalized
     text (zero-cost-substitutable chars mapped to one representative) —
@@ -188,21 +145,22 @@ def _keys_for(df: DataFrame, id_col: str, text_col: str, n: int, variant: str,
         return (f"concat({segment_keys_sql(text_col, k)}, "
                 f"{probe_keys_sql(text_col, k, len_tol=n)})")
 
+    def keys(frame: DataFrame, keys_sql: str) -> DataFrame:
+        return explode_keys(frame, id_col, hash_keys_sql(keys_sql))
+
     if method == "deletion":
-        return _explode_keys(df, id_col, deletion_keys_sql(text_col, depth))
+        return keys(df, deletion_keys_sql(text_col, depth))
     if method == "segment":
-        return _explode_keys(df, id_col, seg_sql())
+        return keys(df, seg_sql())
     if method == "hybrid":
         # short strings: deletion keys (cheap, exact); long strings: segment
         # keys. Pairs straddling the boundary are covered because BOTH
         # routes are generated for strings within n of SHORT_MAX.
         near = (f"(length(`{text_col}`) >= {SHORT_MAX - n} AND "
                 f"length(`{text_col}`) <= {SHORT_MAX + n})")
-        del_side = _explode_keys(
-            df.where(f"({short}) OR {near}"), id_col,
-            deletion_keys_sql(text_col, depth))
-        seg_side = _explode_keys(
-            df.where(f"(NOT ({short})) OR {near}"), id_col, seg_sql())
+        del_side = keys(df.where(f"({short}) OR {near}"),
+                        deletion_keys_sql(text_col, depth))
+        seg_side = keys(df.where(f"(NOT ({short})) OR {near}"), seg_sql())
         return del_side.unionByName(seg_side)
     raise ValueError(f"unknown blocking method {method!r}")
 
@@ -239,7 +197,8 @@ def fuzzy_join(
 
     ``persist`` caches both inputs (MEMORY_AND_DISK): each side is read
     twice (key explode + text attach), and without a cache or an upstream
-    checkpoint Spark would re-run their whole lineage per read.
+    checkpoint Spark would re-run their whole lineage per read. Release
+    via ``operators.dedup.unpersist_inputs(result)`` after materializing.
     """
     if persist:
         queries = queries.persist()
@@ -249,12 +208,15 @@ def fuzzy_join(
                    subst=substitutions)
     dk = _keys_for(dictionary, d_id, d_text, n, variant, method, role="index",
                    subst=substitutions)
-    pairs = _candidates_from_keys(qk, dk, self_join=False)
-    scored = _score_pairs(pairs, queries, dictionary, q_id, q_text, d_id, d_text,
-                          n, variant, subst=substitutions)
-    return scored.selectExpr(
+    scored = _score_pairs(candidate_pairs(qk, dk), queries, dictionary,
+                          q_id, q_text, d_id, d_text, n, variant,
+                          subst=substitutions)
+    out = scored.selectExpr(
         f"_ida AS `{q_id}`", f"_ta AS `{q_text}`",
         f"_idb AS `{d_id}`", f"_tb AS `{d_text}`", "distance")
+    if persist:
+        out._lls_persisted_inputs = [queries, dictionary]
+    return out
 
 
 def fuzzy_self_join(
@@ -275,8 +237,8 @@ def fuzzy_self_join(
 
     Output: id_a, term_a, id_b, term_b, distance. ``salt_threshold``
     routes blocking keys with more members than the threshold through the
-    deterministic triangular salting path (operators/skew.py) instead of
-    a single reducer key.
+    deterministic triangular salting path (operators/candidates.py) instead
+    of a single reducer key.
 
     ``unique_ids=True`` declares that ``terms`` carries one row per
     ``id_col`` (the dictionary contract, e.g. a ``build_dictionary``
@@ -285,13 +247,10 @@ def fuzzy_self_join(
     Results are identical whenever the declaration is true.
 
     ``persist`` caches the terms input AND the exploded key table: the
-    plan reads terms four times (two key sides + two text attaches) and
-    the key-generation subtree twice — Spark plans identical subtrees
-    independently (no cross-join common-subexpression reuse, and the
-    per-side column aliases defeat ReusedExchange), so without the cache
-    any upstream lineage (e.g. a build_dictionary aggregation) re-runs
-    per read. Release via ``operators.dedup.unpersist_inputs(result)``
-    after materializing.
+    plan reads terms three times (key explode + two text attaches), and
+    without the cache any upstream lineage (e.g. a build_dictionary
+    aggregation) re-runs per read. Release via
+    ``operators.dedup.unpersist_inputs(result)`` after materializing.
     """
     persisted = []
     if persist:
@@ -303,12 +262,8 @@ def fuzzy_self_join(
     if persist:
         keys = keys.persist()
         persisted.append(keys)
-    if salt_threshold is not None:
-        from liblevenshtein_rust_spark.operators.skew import salted_self_candidates
-        pairs = salted_self_candidates(keys, hot_threshold=salt_threshold,
-                                       n_groups=salt_groups)
-    else:
-        pairs = _candidates_from_keys(keys, keys, self_join=True)
+    pairs = candidate_pairs(keys, salt_threshold=salt_threshold,
+                            salt_groups=salt_groups)
     scored = _score_pairs(pairs, terms, terms, id_col, text_col, id_col, text_col,
                           n, variant, subst=substitutions,
                           dedupe_texts=not unique_ids)
@@ -366,14 +321,13 @@ def fuzzy_prefix_join(
             f"filter(array({lens_sql}), l -> l <= length({d_text}))")).alias("_pl"),
         F.col(d_text).alias("_t"),
     ).select("_bid", F.expr("substring(_t, 1, _pl)").alias("_p"))
-    dk = pref.selectExpr(
-        "_bid",
-        f"explode({hash_keys_sql(deletion_keys_sql('_p', depth))}) AS _bkey"
-    ).dropDuplicates(["_bid", "_bkey"])
-    qk = _explode_keys(queries, q_id, deletion_keys_sql(q_text, depth))
-    pairs = _candidates_from_keys(qk, dk, self_join=False)
-    with_text = _attach_texts(pairs, queries, dictionary,
-                              q_id, q_text, d_id, d_text).where(
+    dk = explode_keys(pref, "_bid",
+                      hash_keys_sql(deletion_keys_sql("_p", depth))) \
+        .dropDuplicates(["_bid", "_bkey"])
+    qk = explode_keys(queries, q_id,
+                      hash_keys_sql(deletion_keys_sql(q_text, depth)))
+    with_text = attach(candidate_pairs(qk, dk), queries, dictionary,
+                       q_id, q_text, d_id, d_text).where(
         F.length("_ta") - F.length("_tb") <= F.lit(n))
     # truncate the term JVM-side so Arrow never ships more than |q|+n chars
     with_text = with_text.withColumn(
@@ -494,9 +448,8 @@ def weighted_fuzzy_join(
     qk = _keys_for(queries, q_id, q_text, n_env, variant, method, role="probe")
     dk = _keys_for(dictionary, d_id, d_text, n_env, variant, method,
                    role="index")
-    pairs = _candidates_from_keys(qk, dk, self_join=False)
-    with_text = _attach_texts(pairs, queries, dictionary,
-                              q_id, q_text, d_id, d_text)
+    with_text = attach(candidate_pairs(qk, dk), queries, dictionary,
+                       q_id, q_text, d_id, d_text)
     # JVM prefilters before the Arrow kernel: a length delta of k costs
     # >= k * (cheapest per-unit length change — an UNEVEN string op like
     # ph→f changes length by 1 at its own weight); and the unit envelope
@@ -514,9 +467,12 @@ def weighted_fuzzy_join(
             F.expr(f"levenshtein(_ta, _tb, {int(n_env)}) >= 0"))
     cost_udf = make_weighted_distance_udf(float(max_cost), ops)
     scored = with_text.withColumn("cost", cost_udf(F.col("_ta"), F.col("_tb")))
-    return scored.where(F.col("cost") <= float(max_cost)).select(
+    out = scored.where(F.col("cost") <= float(max_cost)).select(
         F.col("_ida").alias(q_id), F.col("_ta").alias(q_text),
         F.col("_idb").alias(d_id), F.col("_tb").alias(d_text), "cost")
+    if persist:
+        out._lls_persisted_inputs = [queries, dictionary]
+    return out
 
 
 #: per-worker-process cache of broadcast-join indexes, keyed by the join
@@ -528,7 +484,7 @@ _BCAST_CACHE_MAX = 8
 
 
 def _py_deletion_neighborhood(s: str, depth: int) -> set[str]:
-    """Python twin of blocking_keys.deletion_keys (uncapped): all deletion
+    """Python twin of blocking_keys.deletion_keys_sql (uncapped): all deletion
     variants of ``s`` at depths 0..depth. Same set the SQL expression
     generates, so the broadcast index and the blocked join share one
     completeness proof."""

@@ -17,6 +17,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from liblevenshtein_rust_spark.operators.candidates import (
+    attach,
+    candidate_pairs,
+    explode_keys,
+)
+
 
 def _dot(a: str, b: str) -> F.Column:
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0D, (s, v) -> s + v)")
@@ -240,8 +246,9 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
     are scored, the same signature/band machinery as cosine_top_k_lsh;
     recall < 1 by design and measured against exact in
     tests/test_similarity.py. The band-key join ships (id, int64) only;
-    vectors are attached to surviving candidate pairs afterwards (the
-    attach-late shape of operators/fuzzy_join).
+    vectors are attached to surviving candidate pairs afterwards, and the
+    shared ``_bkey`` exchange runs the signature UDF once, not per side
+    (operators/candidates).
 
     Output: (id_a, id_b, sim).
     """
@@ -262,24 +269,15 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
                     (_dot("_va", "_vb") / (F.col("_na") * F.col("_nb")))
                     .alias("sim"))
                 .where(F.col("sim") >= float(threshold)))
-    elif method == "lsh":
-        sig_udf = make_signature_udf(n_planes, seed)
-        keyed = (
-            df.select(F.col(id_col).alias("_id"),
-                      sig_udf(F.col(vec_col)).alias("_sig"))
-            .select("_id", F.explode(
-                F.expr(_band_key_expr(n_planes, n_bands))).alias("_bkey"))
-        )
-        lk = keyed.select(F.col("_id").alias("id_a"), "_bkey")
-        rk = keyed.select(F.col("_id").alias("id_b"), "_bkey")
-        pairs = (lk.join(rk, "_bkey").where(F.col("id_a") < F.col("id_b"))
-                 .dropDuplicates(["id_a", "id_b"]))
-        cand = (pairs
-                .join(df.select(F.col(id_col).alias("id_a"),
-                                F.col(vec_col).alias("_va")), "id_a")
-                .join(df.select(F.col(id_col).alias("id_b"),
-                                F.col(vec_col).alias("_vb")), "id_b"))
-    else:
+    if method != "lsh":
         raise ValueError(f"unknown method {method!r}")
-    return (cand.select("id_a", "id_b", _cosine("_va", "_vb").alias("sim"))
+    sig_udf = make_signature_udf(n_planes, seed)
+    sigs = df.select(F.col(id_col), sig_udf(F.col(vec_col)).alias("_sig"))
+    pairs = candidate_pairs(explode_keys(
+        sigs, id_col, _band_key_expr(n_planes, n_bands)))
+    cand = attach(pairs, df, df, id_col, vec_col, id_col, vec_col,
+                  dedupe=False)
+    return (cand.select(F.col("_ida").alias("id_a"),
+                        F.col("_idb").alias("id_b"),
+                        _cosine("_ta", "_tb").alias("sim"))
             .where(F.col("sim") >= float(threshold)))

@@ -56,7 +56,7 @@ class PipelineConfig:
     #: joins over the same keys at 100 TB. None = plain parquet dirs.
     bucket_by: int | None = None
     #: blocking keys with more members than this route through the
-    #: deterministic triangular salting path (operators/skew.py) instead
+    #: deterministic triangular salting path (operators/candidates.py) instead
     #: of one reducer key; None = rely on AQE skew-join splitting alone.
     #: Set on corpora with pathological hot keys (common short turns).
     salt_threshold: int | None = None

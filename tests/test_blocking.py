@@ -100,7 +100,7 @@ def test_sql_matches_python_key_formulas(spark):
     """Pin the SQL expressions to the python mirrors used in the property
     tests, over a deliberately tricky set of strings."""
     from liblevenshtein_rust_spark.functions.blocking_keys import (
-        deletion_keys, probe_keys, segment_keys)
+        deletion_keys_sql, probe_keys_sql, segment_keys_sql)
     import pyspark.sql.functions as F
 
     strs = ["", "a", "ab", "abc", "abcd", "tests", "café", "日本語のテキスト",
@@ -108,9 +108,9 @@ def test_sql_matches_python_key_formulas(spark):
     df = spark.createDataFrame([(s,) for s in strs], ["t"])
     rows = df.select(
         "t",
-        deletion_keys("t", 2).alias("dk"),
-        segment_keys("t", 2).alias("sk"),
-        probe_keys("t", 2, 2).alias("pk"),
+        F.expr(deletion_keys_sql("t", 2)).alias("dk"),
+        F.expr(segment_keys_sql("t", 2)).alias("sk"),
+        F.expr(probe_keys_sql("t", 2, 2)).alias("pk"),
     ).collect()
     for r in rows:
         assert set(r.dk) == py_deletion_keys(r.t, 2), r.t

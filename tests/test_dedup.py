@@ -28,7 +28,11 @@ from liblevenshtein_rust_spark.operators.dedup import (
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    # released at module end: a cached documents.parquet would otherwise be
+    # substituted into every later test that reads the same file
+    cached = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    yield cached
+    cached.unpersist()
 
 
 def _shingle_sets(docs, k=3):

@@ -80,3 +80,9 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"term_a", "term_b", "distance"}
+
+
+def test_values_df_round_trips_escapes(spark):
+    vals = ["a\\b", "c\\nd", "x'y"]
+    df = entry_mod._values_df(spark, [(v,) for v in vals], ["t"])
+    assert [r.t for r in df.collect()] == vals

@@ -285,3 +285,23 @@ def test_union_replace_last_wins(spark):
         {("a", 1), ("b", 2), ("c", 3)}
     assert {tuple(r) for r in union_replace(empty, other).collect()} == \
         {("b", 20), ("d", 40)}
+
+
+@pytest.mark.parametrize("join", ["fuzzy_join", "weighted_fuzzy_join"])
+def test_persisted_inputs_are_released(spark, join):
+    """persist=True registers both cached inputs on the result, so
+    unpersist_inputs releases them."""
+    from liblevenshtein_rust_spark.operators.dedup import unpersist_inputs
+    from liblevenshtein_rust_spark.operators.fuzzy_join import (
+        weighted_fuzzy_join)
+    terms = spark.createDataFrame([("t1", "test"), ("t2", "tast")],
+                                  ["term_id", "term"])
+    qs = spark.createDataFrame([("q1", "tst")], ["q_id", "q_text"])
+    if join == "fuzzy_join":
+        out = fuzzy_join(qs, terms, n=1, persist=True)
+    else:
+        out = weighted_fuzzy_join(qs, terms, max_cost=1.0, persist=True)
+    assert out.count() == 2
+    assert qs.is_cached and terms.is_cached
+    unpersist_inputs(out)
+    assert not qs.is_cached and not terms.is_cached

@@ -151,3 +151,42 @@ def test_substring_best_match_hash_aggregates(spark):
     plan = _plan(fuzzy_substring_join(qdf, docs, n=1))
     assert "SortAggregate" not in plan, plan
     assert "HashAggregate" in plan, plan
+
+
+def _final_plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue().split("== Initial Plan ==")[0]
+
+
+def test_band_self_joins_share_one_key_exchange(spark, sf_dir):
+    """Every blocked self-join goes through operators/candidates: the key
+    table is shuffled on _bkey ONCE and the other join side reuses that
+    exchange, so the key pipeline (and any signature UDF under it) runs
+    once — for cosine LSH, one ArrowEvalPython, not one per side."""
+    import re
+    from liblevenshtein_rust_spark.operators.dedup import (
+        minhash_lsh_pairs, simhash_pairs)
+    from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary
+    from liblevenshtein_rust_spark.operators.similarity import (
+        cosine_near_dup_pairs)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    calls = {
+        "fuzzy_self_join": fuzzy_self_join(
+            build_dictionary(docs.select("text")), n=2,
+            variant="transposition", method="hybrid"),
+        "minhash": minhash_lsh_pairs(docs),
+        "simhash": simhash_pairs(docs),
+        "cosine": cosine_near_dup_pairs(emb, 0.35, method="lsh"),
+    }
+    for name, df in calls.items():
+        df.collect()
+        plan = _final_plan(df)
+        exchanges = re.findall(r"\+- Exchange hashpartitioning\(_bkey", plan)
+        reused = re.findall(
+            r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(_bkey", plan)
+        assert len(exchanges) == 1 and len(reused) == 1, (name, plan)
+        if name == "cosine":
+            assert plan.count("ArrowEvalPython") == 1, plan

@@ -5,6 +5,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from liblevenshtein_rust_spark.functions.blocking_keys import (
+    deletion_keys_sql,
+    hash_keys_sql,
+)
+from liblevenshtein_rust_spark.operators.candidates import explode_keys
 from liblevenshtein_rust_spark.operators.fuzzy_join import (
     build_dictionary,
     fuzzy_self_join,
@@ -23,14 +28,15 @@ def skewed_terms(spark):
     return build_dictionary(df).cache()
 
 
-def test_salted_equals_unsalted(spark, skewed_terms):
+@pytest.mark.parametrize("method", ["deletion", "hybrid"])
+def test_salted_equals_unsalted(spark, skewed_terms, method):
     plain = {
         (r.term_a, r.term_b, r.distance)
-        for r in fuzzy_self_join(skewed_terms, n=2, method="deletion").collect()
+        for r in fuzzy_self_join(skewed_terms, n=2, method=method).collect()
     }
     salted = {
         (r.term_a, r.term_b, r.distance)
-        for r in fuzzy_self_join(skewed_terms, n=2, method="deletion",
+        for r in fuzzy_self_join(skewed_terms, n=2, method=method,
                                  salt_threshold=5, salt_groups=4).collect()
     }
     assert salted == plain
@@ -38,10 +44,8 @@ def test_salted_equals_unsalted(spark, skewed_terms):
 
 
 def test_block_stats_reports_hot_blocks(spark, skewed_terms):
-    from liblevenshtein_rust_spark.operators.fuzzy_join import _keys_for
-
-    keys = _keys_for(skewed_terms, "term_id", "term", 2, "standard",
-                     "deletion", role="both")
+    keys = explode_keys(skewed_terms, "term_id",
+                        hash_keys_sql(deletion_keys_sql("term", 2)))
     stats = block_size_stats(keys).collect()[0]
     assert stats.max_block > 5
     assert stats.candidate_pairs_upper > 0
